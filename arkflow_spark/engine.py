@@ -30,6 +30,7 @@ from arkflow_spark.registry import (
     PROCESSORS,
     TEMPORARIES,
 )
+from arkflow_spark.sources.push_source import hit_cap
 
 
 class Stream:
@@ -52,8 +53,10 @@ class Stream:
 
     # -- shared transform chain ------------------------------------------
     def _transform(self, df: DataFrame) -> DataFrame:
+        # under foreachBatch the batch lives in a cloned session, where the
+        # sql processor looks its views up
         for t in self.temporaries:
-            t.register(self.spark, df)
+            t.register(df.sparkSession, df)
         if self.buffer is not None:
             df = self.buffer.apply(self.spark, df)
         for p in self.processors:
@@ -89,7 +92,9 @@ class Stream:
 
         ``once=True`` uses the availableNow trigger: process everything
         currently available (respecting per-trigger ingest caps), then stop
-        — the drain-and-exit mode for backfills and bounded demo runs.
+        — the drain-and-exit mode for backfills and bounded demo runs. It
+        blocks until drained and returns the last, terminated, query: a
+        spool backlog over the read cap takes one run per cap.
 
         A stream-level ``durability:`` block (reference:
         examples/durability_example.yaml) overrides the checkpoint
@@ -118,8 +123,17 @@ class Stream:
             .queryName(self.name or "arkflow-stream")
         )
         if once:
+            # Spark fixes an availableNow run's end offset with one read of
+            # a Python source, and a spool read stops at MAX_BATCH messages:
+            # rerun on the same checkpoint until no read was cut there
             writer = writer.trigger(availableNow=True)
-            return writer.start()
+            while True:
+                q = writer.start()
+                q.awaitTermination()
+                if not any(
+                    hit_cap(s) for p in q.recentProgress for s in p.sources
+                ):
+                    return q
         interval = trigger_ms
         if interval is None and self.buffer is not None:
             interval = getattr(self.buffer, "timeout_ms", None) or getattr(

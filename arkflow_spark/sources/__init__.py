@@ -205,7 +205,7 @@ class SpoolDirInput:
     def __init__(self, conf: dict):
         self.path = conf["path"]
         self.source_name = conf.get("source_name", "spooldir")
-        # passthrough knobs: compact_on_commit, rowsperpartition, ...
+        # passthrough options, e.g. compact_on_commit
         self.options = {
             k: str(v)
             for k, v in conf.items()

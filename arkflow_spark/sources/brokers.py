@@ -6,8 +6,8 @@ modbus}.rs): each broker gets a thin *client adapter* exposing one
 contract — ``subscribe(on_message)`` delivering payload bytes until closed
 — and a shared :class:`BrokerStreamReader` that pumps those payloads into
 the spool dir via :func:`push_source.spool_write`, then serves them through
-the inherited DataSourceStreamReader offset machinery (initialOffset /
-latestOffset / partitions / read / commit).
+the inherited spool reader (initialOffset / read / readBetweenOffsets /
+commit).
 
 Client resolution per source, in order:
 
@@ -20,8 +20,9 @@ Client resolution per source, in order:
 3. the broker's default adapter, import-gated on its (absent-in-container)
    client library with an actionable error.
 
-The pump runs on the DRIVER (offset discovery happens there); executors
-only read committed spool files — the same split the reference has between
+The pump runs in the driver's streaming runner, where ``read`` also
+prefetches each batch from the spool; executors read spool files only to
+replay a batch after a restart — the same split the reference has between
 its connection task and its batch reads.
 """
 
@@ -33,6 +34,7 @@ import threading
 import time
 
 from arkflow_spark.sources.push_source import (
+    SpoolDirBatchReader,
     SpoolDirDataSource,
     SpoolDirStreamReader,
     spool_write,
@@ -69,9 +71,9 @@ def resolve_client(options: dict, default_factory):
 
 class BrokerStreamReader(SpoolDirStreamReader):
     """Spool reader + driver-side subscriber pump. The pump starts lazily
-    at the first offset discovery and appends every delivered payload to
-    the spool, where the inherited offset/partition/read machinery picks
-    it up exactly like an externally-bridged spool."""
+    at the first ``read`` and appends every delivered payload to the spool,
+    where the inherited reader picks it up exactly like an
+    externally-bridged spool."""
 
     def __init__(self, options: dict, default_factory):
         super().__init__(options)
@@ -79,7 +81,7 @@ class BrokerStreamReader(SpoolDirStreamReader):
         self._pump_started = False
 
     def __getstate__(self):
-        # executors only run read() over the spool; the client (threads,
+        # executors only replay ranges from the spool; the client (threads,
         # sockets, locks) is driver-only state and must not ship
         state = dict(self.__dict__)
         state["_client"] = None
@@ -119,9 +121,9 @@ class BrokerStreamReader(SpoolDirStreamReader):
 
         threading.Thread(target=pump, daemon=True).start()
 
-    def latestOffset(self) -> dict:
+    def read(self, start: dict):
         self._ensure_pump()
-        return super().latestOffset()
+        return super().read(start)
 
     def stop(self) -> None:
         if getattr(self, "_pump_stop", None) is not None:
@@ -336,7 +338,7 @@ def _broker_source(fmt_name: str, factory):
         def name(cls) -> str:
             return fmt_name
 
-        def streamReader(self, schema) -> BrokerStreamReader:
+        def simpleStreamReader(self, schema) -> BrokerStreamReader:
             return BrokerStreamReader(self.options, factory)
 
         def reader(self, schema):
@@ -345,13 +347,10 @@ def _broker_source(fmt_name: str, factory):
             # clients can't be drained in one shot — batch reads serve the
             # current spool snapshot (backfill semantics), stream mode is
             # the live path
-            from arkflow_spark.sources.push_source import SpoolDirBatchReader
-
             stream = BrokerStreamReader(self.options, factory)
             if getattr(stream._client, "synchronous", False):
                 stream._ensure_pump()
-            reader = SpoolDirBatchReader(self.options)
-            return reader
+            return SpoolDirBatchReader(self.options)
 
     _Source.__name__ = f"{fmt_name.capitalize()}DataSource"
     _Source.__doc__ = (

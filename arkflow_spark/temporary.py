@@ -11,15 +11,39 @@ optionally key-filtered by a SQL expression over the batch (a semi join —
 the distributed analog of MGET on the batch's keys), registered as a temp
 view for the user's join SQL, and broadcast when small.
 
+Lookups built on the driver (``static`` rows, ``redis`` hits) become
+``pyarrow`` tables, so their DataFrames plan as a JVM-local
+``LocalRelation``: registering and broadcasting them per batch runs no
+Python worker.
+
 Interface: ``register(session, batch_df) -> None``.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from arkflow_spark.registry import TEMPORARIES
+
+
+def _local_table(rows: list, schema: str) -> pa.Table:
+    """Driver-side rows (tuples, in DDL ``schema`` order) as an Arrow table;
+    ``createDataFrame`` of it is a LocalRelation. Naive datetimes are taken
+    as UTC."""
+    struct = StructType.fromDDL(schema)
+    for r in rows:
+        if len(r) != len(struct.names):
+            raise ValueError(
+                f"row {r!r} has {len(r)} values, schema {schema!r} "
+                f"has {len(struct.names)} columns"
+            )
+    return pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
 
 
 class _BaseTemporary:
@@ -52,18 +76,18 @@ class _BaseTemporary:
 
 @TEMPORARIES.register("static")
 class StaticTemporary(_BaseTemporary):
-    """Inline rows: ``rows`` (list of dicts) + ``schema`` (DDL)."""
+    """Inline rows: ``rows`` (list of dicts) + ``schema`` (DDL), converted
+    to Arrow once."""
 
     def __init__(self, conf: dict):
         super().__init__(conf)
-        self.rows = conf["rows"]
-        self.schema = conf["schema"]
+        self.table = _local_table(
+            [tuple(r.values()) if isinstance(r, dict) else tuple(r) for r in conf["rows"]],
+            conf["schema"],
+        )
 
     def _load(self, session: SparkSession) -> DataFrame:
-        return session.createDataFrame(
-            [tuple(r.values()) if isinstance(r, dict) else tuple(r) for r in self.rows],
-            self.schema,
-        )
+        return session.createDataFrame(self.table)
 
 
 @TEMPORARIES.register("file")
@@ -155,5 +179,5 @@ class RedisTemporary(_BaseTemporary):
             if v is not None
         ]
         schema = f"{self.key_column} string, {self.value_column} string"
-        lookup = session.createDataFrame(rows, schema)
+        lookup = session.createDataFrame(_local_table(rows, schema))
         F.broadcast(lookup).createOrReplaceTempView(self.name)

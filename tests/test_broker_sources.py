@@ -7,6 +7,10 @@ design; the default adapters are import-gated)."""
 
 from __future__ import annotations
 
+import os
+import sys
+import time
+
 import pytest
 
 from arkflow_spark.sources.brokers import (
@@ -48,11 +52,11 @@ def test_subscribe_spool_offsets_per_broker(source_cls, tmp_path):
         FACTORIES[name],
     )
     assert reader.initialOffset() == {"seq": -1}
-    end = reader.latestOffset()  # starts the pump (synchronous fake)
+    it, end = reader.read({"seq": -1})  # starts the pump (synchronous fake)
     assert end == {"seq": 3}
 
-    (part,) = reader.partitions({"seq": -1}, end)
-    rows = list(reader.read(part))
+    rows = list(it)
+    assert list(reader.readBetweenOffsets({"seq": -1}, end)) == rows
     assert [bytes(r[0]) for r in rows] == [
         f"{name}-{i}".encode() for i in range(4)
     ]
@@ -61,10 +65,9 @@ def test_subscribe_spool_offsets_per_broker(source_cls, tmp_path):
 
     # late external append (bridge write) -> offset advances incrementally
     spool_write(spool, b"late")
-    end2 = reader.latestOffset()
+    it2, end2 = reader.read(end)
     assert end2 == {"seq": 4}
-    (part2,) = reader.partitions(end, end2)
-    assert [bytes(r[0]) for r in list(reader.read(part2))] == [b"late"]
+    assert [bytes(r[0]) for r in it2] == [b"late"]
     reader.stop()
 
 
@@ -88,7 +91,7 @@ def test_injectable_factory_by_module_path(tmp_path):
         mqtt_client,
     )
     assert isinstance(reader._client, FakeBrokerClient)
-    assert reader.latestOffset() == {"seq": 1}
+    assert reader.read(reader.initialOffset())[1] == {"seq": 1}
 
 
 def test_streaming_end_to_end_fake_broker(spark, tmp_path):
@@ -132,3 +135,49 @@ def test_batch_read_pumps_synchronous_clients(spark, tmp_path):
     )
     vals = sorted(bytes(r["__value__"]).decode() for r in df.collect())
     assert vals == ["msg-0", "msg-1", "msg-2"]
+
+
+class _ClosingClient(FakeBrokerClient):
+    """Fake feed that marks its close in ``<path>.closed``."""
+
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self.marker = options["path"] + ".closed"
+
+    def close(self) -> None:
+        open(self.marker, "w").close()
+
+
+def test_stopping_a_query_closes_the_broker_client(spark, tmp_path):
+    """Stopping a streaming query stops the reader in Spark's streaming
+    runner, which closes the broker client (a clean disconnect)."""
+    from pyspark import cloudpickle
+
+    from arkflow_spark.sources.brokers import _broker_source
+
+    # the client lives in this test module, which Spark's Python workers
+    # cannot import: ship it by value
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    try:
+        spark.dataSource.register(_broker_source("close_spy", _ClosingClient))
+    finally:
+        cloudpickle.unregister_pickle_by_value(sys.modules[__name__])
+    spool = str(tmp_path / "spool")
+    q = (
+        spark.readStream.format("close_spy")
+        .option("path", spool)
+        .load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert sum(p.numInputRows for p in q.recentProgress) == 3
+        assert not os.path.exists(spool + ".closed")
+    finally:
+        q.stop()
+    deadline = time.time() + 30
+    while not os.path.exists(spool + ".closed") and time.time() < deadline:
+        time.sleep(0.2)
+    assert os.path.exists(spool + ".closed")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from arkflow_spark.registry import PROCESSORS, load_all
@@ -131,6 +132,40 @@ def test_redis_temporary_mget_lookup(spark):
     ]
     # one MGET of the distinct non-null keys
     assert len(fake.calls) == 1 and sorted(fake.calls[0]) == ["s1", "s2", "s3"]
+
+
+def test_driver_built_lookups_are_local_relations(spark):
+    """`static` rows and redis hits reach the JVM as Arrow: their views plan
+    as LocalRelation, so the per-batch broadcast starts no Python worker
+    (a list-of-tuples createDataFrame would plan a PythonRDD scan)."""
+    from arkflow_spark.registry import TEMPORARIES, load_all
+
+    load_all()
+    batch = spark.createDataFrame([("s1",), ("s2",)], "sensor string")
+    static = TEMPORARIES.build(
+        {"type": "static", "name": "units_local", "schema": "sensor string, unit string",
+         "rows": [{"sensor": "s1", "unit": "celsius"}, ["s2", None]]}
+    )
+    redis = TEMPORARIES.build(
+        {"type": "redis", "name": "redis_local", "key_expr": "sensor",
+         "key_column": "sensor", "value_column": "unit",
+         "client": FakeRedis({"s1": b"celsius"})}
+    )
+    for t in (static, redis):
+        t.register(spark, batch)
+        plan = spark.table(t.name)._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert sorted(tuple(r) for r in spark.table("units_local").collect()) == [
+        ("s1", "celsius"), ("s2", None),
+    ]
+    assert [tuple(r) for r in spark.table("redis_local").collect()] == [("s1", "celsius")]
+    # a row that does not fit the schema is rejected, not padded or cut
+    for bad in (["s3"], ["s3", "kelvin", "extra"]):
+        with pytest.raises(ValueError, match="has 2 columns"):
+            TEMPORARIES.build(
+                {"type": "static", "name": "units_bad",
+                 "schema": "sensor string, unit string", "rows": [bad]}
+            )
 
 
 def test_remap_processor_vrl_capability(spark):

@@ -417,6 +417,34 @@ def test_stream_level_temporary_registration(spark):
     assert [(r["sensor"], r["unit"]) for r in rows] == [("s1", "celsius"), ("s9", None)]
 
 
+def test_stream_level_temporary_in_streaming_mode(spark, tmp_path):
+    """examples/lookup_enrichment_example.yaml's stream-level `static`
+    lookup under Structured Streaming: foreachBatch hands the batch over in
+    a cloned session, and the lookup must be registered where the sql
+    processor queries (not TABLE_OR_VIEW_NOT_FOUND)."""
+    import yaml as _y
+
+    from arkflow_spark.sources.push_source import spool_write
+
+    with open("examples/lookup_enrichment_example.yaml") as f:
+        conf = _y.safe_load(f)
+    stream = conf["streams"][0]
+    spool = str(tmp_path / "spool")
+    for m in stream["input"]["messages"]:
+        spool_write(spool, m.encode())
+    stream["input"] = {"type": "spooldir", "path": spool}
+    stream["output"] = {"type": "memory"}
+    eng = Engine(spark, EngineConfig.from_dict(conf))
+    q = eng.streams[0].start(str(tmp_path / "ckpt"), once=True)
+    assert q.awaitTermination(120), "availableNow query did not terminate"
+    assert q.exception() is None
+    rows = [r for b in eng.streams[0].output.batches for r in b]
+    assert sorted((r["sensor"], r["reading"], r["unit"]) for r in rows) == [
+        ("s1", 21.5, "celsius"),
+        ("s2", 300.1, "kelvin"),
+    ]
+
+
 def test_python_processor_inline_script_example(spark):
     """The reference's python_processor_example.yaml surface: inline
     ``script:`` + ``function:`` in YAML, per-batch RecordBatch-in /
